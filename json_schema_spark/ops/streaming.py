@@ -159,83 +159,14 @@ def start_violation_sink(stream_df: DataFrame, cset: ConstraintSet,
     return writer.start()
 
 
-class StreamingNovelFilter:
-    """Cross-micro-batch incremental dedup: a foreachBatch processor
-    that keeps a Bloom filter of every key seen in PRIOR batches on the
-    driver (~1 MB at the default 8 Mbit), probes each new batch against
-    it, hands the definitely-novel rows to ``sink``, then folds the
-    batch's keys into the filter.
-
-    Semantics: a key is emitted at most once across the stream's
-    lifetime (no false negatives in the filter means no duplicate
-    emissions); at the configured false-positive rate a genuinely novel
-    key may be mistaken for seen and dropped — this is a PRE-FILTER for
-    volume reduction (route `_maybe_seen` rows to exact reconciliation
-    if completeness matters). The filter state lives on the driver, so
-    restarts need re-priming: pass a `bloom` built over the already-
-    emitted corpus (build_bloom), mirroring how the batch seen_filter
-    primes from a reference table. All per-row work (md5 positions,
-    bitmap scatter/probe) runs on executors via the same vectorized
-    build/probe as the batch path; only the O(n_bits/8) byte OR runs
-    per batch on the driver.
-
-    Usage::
-
-        f = StreamingNovelFilter(sink=lambda df, bid: df.write...)
-        q = (stream.writeStream.foreachBatch(f)
-             .option("checkpointLocation", ckpt).start())
-    """
-
-    def __init__(self, key_col: str = "digest", n_bits: int = 1 << 23,
-                 n_hashes: int = 3, sink=None,
-                 bloom: bytes | None = None):
-        import numpy as np
-
-        self.key_col = key_col
-        self.n_bits = n_bits
-        self.n_hashes = n_hashes
-        self.sink = sink
-        if bloom is not None and len(bloom) != n_bits // 8:
-            raise ValueError(
-                f"priming bloom is {len(bloom)} bytes but n_bits="
-                f"{n_bits} needs {n_bits // 8} — the filter must be "
-                "re-primed with a bloom built at the same n_bits "
-                "(mismatched sizes probe wrong bit positions)")
-        self.bits = (np.frombuffer(bloom, dtype=np.uint8).copy()
-                     if bloom is not None
-                     else np.zeros(n_bits // 8, dtype=np.uint8))
-        self.novel_count = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import numpy as np
-
-        from json_schema_spark.textops.dedup import bloom_probe, build_bloom
-
-        novel = (bloom_probe(batch_df, self.bits.tobytes(), self.key_col,
-                             self.n_bits, self.n_hashes)
-                 .filter(~F.col("_maybe_seen")).drop("_maybe_seen"))
-        # the sink must consume novel BEFORE the filter absorbs the
-        # batch (probe uses the pre-batch bitmap; within-batch
-        # duplicates therefore all pass — dropDuplicates upstream or in
-        # the sink if per-batch uniqueness matters)
-        if self.sink is not None:
-            self.sink(novel, batch_id)
-        else:
-            self.novel_count += novel.count()
-        self.bits |= np.frombuffer(
-            build_bloom(batch_df, self.key_col, self.n_bits,
-                        self.n_hashes), dtype=np.uint8)
-
-
 class ShardedNovelFilter:
-    """Web-scale cross-batch incremental dedup: the sharded-bloom
-    analog of StreamingNovelFilter. The filter state is a (shard,
-    bloom) PARQUET TABLE under ``state_dir`` — built, probed, merged,
-    and stored entirely on executors/disk, never materialized on the
-    driver — so membership state scales past the single-bitmap
-    driver cap (~10^9 keys) to whatever n_shards x bits_per_shard the
-    cluster's storage holds (see textops.dedup's sharding sizing
-    rule).
+    """Cross-micro-batch incremental dedup: a foreachBatch processor
+    over a sharded Bloom filter of every key seen in PRIOR batches. The
+    filter state is a (shard, bloom) PARQUET TABLE under ``state_dir``
+    — built, probed, merged, and stored entirely on executors/disk,
+    never materialized on the driver — so membership state scales to
+    whatever n_shards x bits_per_shard the cluster's storage holds
+    (see textops.dedup's sharding sizing rule).
 
     Per batch: probe the batch against the current state epoch
     (cogrouped applyInPandas — one task per touched shard), hand the
@@ -247,10 +178,17 @@ class ShardedNovelFilter:
     disk stays ONE filter copy, not one per batch). Restart
     recovery is automatic — the newest complete epoch on disk primes
     the filter, mirroring how Spark's own streaming state store
-    versions per batch. Same semantics as StreamingNovelFilter: no
-    false negatives (a key never re-emits), false positives at the
-    configured rate drop novel keys — a volume pre-filter, not an
-    exact dedup.
+    versions per batch. No false negatives (a key never re-emits);
+    false positives at the configured rate drop novel keys — a volume
+    pre-filter, not an exact dedup. Within-batch duplicates all pass
+    (the probe uses the pre-batch state): dropDuplicates upstream or in
+    the sink if per-batch uniqueness matters.
+
+    Usage::
+
+        f = ShardedNovelFilter(state_dir, sink=lambda df, bid: ...)
+        q = (stream.writeStream.foreachBatch(f)
+             .option("checkpointLocation", ckpt).start())
     """
 
     def __init__(self, state_dir: str, key_col: str = "digest",
@@ -268,25 +206,40 @@ class ShardedNovelFilter:
         self.novel_count = 0
         self._epoch_re = re.compile(r"^epoch=(\d+)$")
         os.makedirs(state_dir, exist_ok=True)
-        # refuse state from a different bit-position scheme: bitmaps
-        # are length-compatible across schemes, so without this stamp
-        # a restart would probe stale bits silently (re-emitting seen
-        # keys AND dropping novel ones)
+        # refuse state from a different bit-position scheme or filter
+        # geometry: bitmaps are length-compatible across schemes and
+        # shard counts, so without this stamp a restart would probe
+        # stale bits silently (re-emitting seen keys AND dropping novel
+        # ones), and a different bits_per_shard probes wrong positions
         from json_schema_spark.textops.dedup import BLOOM_SCHEME
 
+        geometry = {"n_shards": n_shards,
+                    "bits_per_shard": bits_per_shard,
+                    "n_hashes": n_hashes}
         marker = os.path.join(state_dir, "_scheme.txt")
         if os.path.exists(marker):
             with open(marker) as fh:
-                found = fh.read().strip()
+                found, *lines = fh.read().split()
             if found != BLOOM_SCHEME:
                 raise ValueError(
                     f"state_dir was written under bloom scheme "
                     f"{found!r} but the engine now uses "
                     f"{BLOOM_SCHEME!r} — stale bitmaps probe "
                     "uselessly; start from a fresh state_dir")
+            stamped = dict(line.split("=", 1) for line in lines)
+            for name, value in geometry.items():
+                if stamped.get(name) != str(value):
+                    raise ValueError(
+                        f"state_dir was written with {name}="
+                        f"{stamped.get(name)} but this filter uses "
+                        f"{name}={value} — the bitmaps must be probed "
+                        "with the geometry that built them; reopen "
+                        "with the stamped values or start from a "
+                        "fresh state_dir")
         else:
             with open(marker, "w") as fh:
-                fh.write(BLOOM_SCHEME)
+                fh.write("\n".join([BLOOM_SCHEME] + [
+                    f"{k}={v}" for k, v in geometry.items()]) + "\n")
         self.current_epoch = self._latest_epoch()
 
     def _latest_epoch(self) -> int | None:
@@ -353,7 +306,7 @@ class ShardedNovelFilter:
 
 class StreamingNearNovelFilter:
     """Cross-batch NEAR-dup novelty on the live ingest path: the
-    MinHash-LSH analog of the Bloom novel filters — "have we seen
+    MinHash-LSH analog of ShardedNovelFilter — "have we seen
     something LIKE this" instead of "this exact key". State is the
     persistable LSH bucket index (textops.dedup.build_minhash_index
     rows) under ``index_dir``, APPEND-ONLY parquet: bucket rows are
@@ -366,7 +319,7 @@ class StreamingNearNovelFilter:
     Per batch: probe against the index so far (candidates only — LSH
     recall applies: a near-dup that shares no band bucket re-emits),
     hand rows with no candidate to ``sink``, append their buckets.
-    Caveats, shared with the Bloom filters: within-batch near-dups
+    Caveats, shared with ShardedNovelFilter: within-batch near-dups
     all pass (the probe sees only prior batches — near_dedup_corpus
     the batch first if that matters); a crash between sink and append
     re-runs the batch (the usual foreachBatch at-least-once contract;

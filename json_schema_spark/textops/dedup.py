@@ -1105,10 +1105,10 @@ def near_dedup_keep_best(df: DataFrame, text_col: str = "text",
     return df.join(losers, id_col, "left_anti")
 
 
-# Version marker for PERSISTED bloom state (ShardedNovelFilter epochs,
-# caller-saved priming bitmaps): bits set under a different position
-# scheme probe uselessly — same byte length, silent corruption. Bump
-# on any change to _bloom_positions.
+# Version marker for PERSISTED bloom state (ShardedNovelFilter epochs):
+# bits set under a different position scheme probe uselessly — same
+# byte length, silent corruption. Bump on any change to
+# _bloom_positions.
 BLOOM_SCHEME = "md5-km-v2"
 
 
@@ -1159,117 +1159,13 @@ def _bloom_position_cols(key: Column, n_hashes: int,
             for i in range(n_hashes)]
 
 
-def build_bloom(df: DataFrame, key_col: str = "digest",
-                n_bits: int = 1 << 23, n_hashes: int = 3) -> bytes:
-    """Mergeable Bloom filter over a key column — the t-digest pattern:
-    each partition builds its own bit array, the driver ORs the
-    per-partition arrays (bytes, not data). Positions are computed as
-    Spark md5 expressions (JVM, codegen); the mapInPandas stage only
-    scatters them into the bitmap with numpy (np.bitwise_or.at), and
-    the driver merge is one numpy OR per partition — no per-byte or
-    per-key Python loops anywhere. Deterministic positions, so filters
-    built anywhere agree. Default 8 Mbit ~ 1 MB; size n_bits ~ 10x
-    expected distinct keys for ~2-3%% fpp with 3 hashes."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    def per_partition(batches):
-        import numpy as np
-        import pandas as pd
-
-        bits = np.zeros(n_bits // 8, dtype=np.uint8)
-        for pdf in batches:
-            for col in pdf.columns:
-                p = pdf[col].to_numpy(dtype="float64", na_value=np.nan)
-                p = p[~np.isnan(p)].astype(np.int64)
-                np.bitwise_or.at(
-                    bits, p >> 3,
-                    (np.uint8(1) << (p & 7).astype(np.uint8)))
-        yield pd.DataFrame({"bloom": [bits.tobytes()]})
-
-    parts = (df.select(*_bloom_position_cols(F.col(key_col), n_hashes,
-                                             n_bits))
-             .mapInPandas(per_partition,
-                          T.StructType([T.StructField("bloom",
-                                                      T.BinaryType())]))
-             .collect())
-    merged = np.zeros(n_bits // 8, dtype=np.uint8)
-    for row in parts:
-        merged |= np.frombuffer(row["bloom"], dtype=np.uint8)
-    return merged.tobytes()
-
-
-def bloom_probe(candidates: DataFrame, bloom: bytes,
-                key_col: str = "digest",
-                n_bits: int = 1 << 23, n_hashes: int = 3) -> DataFrame:
-    """Tag each candidate row with `_maybe_seen` = membership of its
-    key in a pre-built Bloom filter (see build_bloom). Positions come
-    from the same Spark md5 expressions as the build side; the pandas
-    UDF only indexes the broadcast bitmap — one vectorized numpy
-    gather per hash, no Python hashing (the bitmap probe itself is the
-    sanctioned non-expressible step, like the t-digest sketches)."""
-    from pyspark.sql import types as T
-
-    sc = candidates.sparkSession.sparkContext
-    b_bloom = sc.broadcast(bloom)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(*pos_series):
-        import numpy as np
-        import pandas as pd
-
-        bits = np.frombuffer(b_bloom.value, dtype=np.uint8)
-        n = len(pos_series[0])
-        ok = np.ones(n, dtype=bool)
-        for s in pos_series:
-            pn = s.to_numpy(dtype="float64", na_value=np.nan)
-            valid = ~np.isnan(pn)
-            hit = np.zeros(n, dtype=bool)
-            pv = pn[valid].astype(np.int64)
-            hit[valid] = (bits[pv >> 3] >> (pv & 7).astype(np.uint8)) & 1
-            ok &= hit  # NULL key -> NULL positions -> not seen
-        return pd.Series(ok)
-
-    return candidates.withColumn(
-        "_maybe_seen",
-        probe(*_bloom_position_cols(F.col(key_col), n_hashes, n_bits)))
-
-
-def seen_filter(reference: DataFrame, candidates: DataFrame,
-                key_col: str = "digest",
-                n_bits: int = 1 << 23, n_hashes: int = 3) -> DataFrame:
-    """Incremental-dedup membership pre-filter: tag each candidate row
-    with `_maybe_seen` = whether its key is (probably) present in the
-    reference corpus.
-
-    Guarantee: NO false negatives — every key actually present in the
-    reference is flagged. False positives occur at the configured rate,
-    so `_maybe_seen` rows needing certainty must be exact-verified
-    (join) — but that join then runs on the tiny flagged subset instead
-    of the full corpus: at 10^12 candidates vs a large reference, the
-    ~1 MB bloom broadcast replaces a full shuffle join for the
-    mostly-novel majority."""
-    bloom = build_bloom(reference, key_col, n_bits, n_hashes)
-    return bloom_probe(candidates, bloom, key_col, n_bits, n_hashes)
-
-
-def novel_documents(reference: DataFrame, candidates: DataFrame,
-                    key_col: str = "digest",
-                    n_bits: int = 1 << 23) -> DataFrame:
-    """Candidates whose key is DEFINITELY absent from the reference
-    (bloom no-false-negative guarantee makes the complement exact-new);
-    the dropped remainder is the maybe-seen set for exact verification."""
-    return (seen_filter(reference, candidates, key_col, n_bits)
-            .filter(~F.col("_maybe_seen")).drop("_maybe_seen"))
-
-
 # ---------------------------------------------------------------------
-# Hash-range-SHARDED Bloom filter — the web-scale membership path.
+# Hash-range-SHARDED Bloom filter — the membership path.
 #
-# The single-bitmap bloom above holds its whole bit array on the driver:
-# fine to ~10^9 distinct keys (~1 GB at 10 bits/key), physically
-# impossible at 10^12 (a 10 Tbit filter is ~1.25 TB of driver bytes).
-# The standard fix is hash-range sharding: shard id = hash(key) mod S,
+# A single bitmap collected to the driver caps out near 10^9 distinct
+# keys (~1 GB at 10 bits/key) and is physically impossible at 10^12
+# (a 10 Tbit filter is ~1.25 TB of driver bytes). Hash-range
+# sharding removes the cap: shard id = hash(key) mod S,
 # one independent bitmap per shard, and the bitmaps STAY DISTRIBUTED as
 # a (shard, bloom) DataFrame — built with one groupBy(shard)
 # applyInPandas, probed with a cogrouped applyInPandas that hands each
@@ -1289,8 +1185,9 @@ def novel_documents(reference: DataFrame, candidates: DataFrame,
 
 def bloom_shard_col(key: Column, n_shards: int) -> Column:
     """Shard id for a key: md5('shard:'+key) first 15 hex chars mod S —
-    independent of the per-position hashes (which are seeded 'i:key'),
-    so sharding does not bias bit positions. NULL key -> NULL shard."""
+    independent of the bit positions (Kirsch-Mitzenmacher double
+    hashing over md5(key), see _bloom_positions), so sharding does not
+    bias bit positions. NULL key -> NULL shard."""
     return (F.conv(F.substring(
         F.md5(F.concat(F.lit("shard:"), key.cast("string"))), 1, 15),
         16, 10).cast("bigint") % n_shards)
@@ -1301,10 +1198,10 @@ def build_bloom_shards(df: DataFrame, key_col: str = "digest",
                        bits_per_shard: int = 1 << 23,
                        n_hashes: int = 3) -> DataFrame:
     """Distributed sharded Bloom build: (shard, bloom) with one bitmap
-    row per shard that actually received keys. Positions are the SAME
-    Spark md5 expressions as the single-bitmap path (JVM, codegen) —
-    with n_shards=1 the output bitmap is byte-identical to
-    build_bloom's. The groupBy(shard) shuffle carries only (shard,
+    row per shard that actually received keys. Positions are Spark md5
+    expressions (JVM, codegen) equal to the _bloom_positions reference
+    — with n_shards=1 the output bitmap is exactly the bits
+    _bloom_positions names. The groupBy(shard) shuffle carries only (shard,
     positions) longs; each task scatters one shard's positions into
     its bitmap with numpy."""
     import pandas as pd
@@ -1342,9 +1239,8 @@ def bloom_probe_shards(candidates: DataFrame, shards: DataFrame,
     """Probe candidates against a sharded bloom table: adds
     `_maybe_seen`. Cogrouped applyInPandas — each task receives one
     shard's candidate rows AND that shard's single bitmap row (absent
-    bitmap = shard never saw a key = definitely novel). Same
-    no-false-negative guarantee as the single-bitmap probe, at any
-    total filter size, with zero driver bytes."""
+    bitmap = shard never saw a key = definitely novel). No false
+    negatives, at any total filter size, with zero driver bytes."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1416,12 +1312,19 @@ def seen_filter_sharded(reference: DataFrame, candidates: DataFrame,
                         n_shards: int = 16,
                         bits_per_shard: int = 1 << 23,
                         n_hashes: int = 3) -> DataFrame:
-    """Sharded-bloom analog of seen_filter: tag candidates with
-    `_maybe_seen` vs a reference corpus, with the filter built, held,
-    and probed entirely on executors — no driver bitmap, so the
-    reference can be arbitrarily large (scale n_shards, not the
-    driver). The bloom table is persisted for the probe and registered
-    in the shared cache registry (caller releases)."""
+    """Incremental-dedup membership pre-filter: tag each candidate row
+    with `_maybe_seen` = whether its key is (probably) present in the
+    reference corpus.
+
+    Guarantee: NO false negatives — every key actually present in the
+    reference is flagged. False positives occur at the configured rate,
+    so `_maybe_seen` rows needing certainty must be exact-verified
+    (join) — but that join then runs on the flagged subset instead of
+    the full corpus. The filter is built, held, and probed entirely on
+    executors — no driver bitmap, so the reference can be arbitrarily
+    large (scale n_shards, not the driver). The bloom table is
+    persisted for the probe and registered in the shared cache
+    registry (caller releases)."""
     shards = _register_cache(
         build_bloom_shards(reference, key_col, n_shards,
                            bits_per_shard, n_hashes))

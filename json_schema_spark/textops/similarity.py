@@ -42,6 +42,18 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _topk(sim: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine_sim) for the k best-scoring
+    neighbors of each query: a row_number window per query, ties broken
+    by neighbor_id, cosine_sim rounded to 6 places."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id"))
+    return (sim.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank",
+                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+
+
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 query_id_col: str | None = None,
@@ -94,12 +106,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
            .withColumn("cosine_sim",
                        dot(F.col("_qv"), F.col("_cv"))
                        / (F.col("_qn") * F.col("_cn"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+    return _topk(sim, k)
 
 
 def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
@@ -189,13 +196,7 @@ def cosine_topk_quantized(queries: DataFrame, corpus: DataFrame,
                       / F.sqrt((F.col("_qqa") * F.col("_qqb"))
                                .cast("double")))
                .otherwise(F.lit(0.0))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6)
-                    .alias("cosine_sim")))
+    return _topk(sim, k)
 
 
 def mean_pool_embeddings(df: DataFrame, group_col: str = "doc_id",
@@ -372,12 +373,7 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     sim = sim.withColumn("cosine_sim",
                          dot(F.col("_qv"), F.col("_cv"))
                          / (F.col("_qn") * F.col("_cn")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+    return _topk(sim, k)
 
 
 def lsh_topk_multi(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -436,12 +432,7 @@ def lsh_topk_multi(queries: DataFrame, corpus: DataFrame, k: int = 5,
            .withColumn("cosine_sim",
                        dot(F.col("_qv"), F.col("_cv"))
                        / (F.col("_qn") * F.col("_cn"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+    return _topk(sim, k)
 
 
 def ivf_seed_centroids(df: DataFrame, n_centroids: int = 16,
@@ -644,12 +635,7 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
            .withColumn("cosine_sim",
                        dot(F.col("_qv"), F.col("_cv"))
                        / (F.col("_qn") * F.col("_cn"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+    return _topk(sim, k)
 
 
 def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95,

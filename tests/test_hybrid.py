@@ -1,4 +1,4 @@
-"""Hybrid JSON validation routing: columnar fast path vs document path."""
+"""Hybrid JSON validation routing: VARIANT path vs document path."""
 
 from __future__ import annotations
 
@@ -21,11 +21,11 @@ NESTED_SCHEMA = {
 
 
 def test_routing_decision():
-    from json_schema_spark.validator.hybrid import is_fast_path
+    from json_schema_spark.validator.hybrid import variant_plan
 
-    assert is_fast_path(FLAT_SCHEMA)
-    assert not is_fast_path(NESTED_SCHEMA)     # array property
-    assert not is_fast_path({"allOf": []})     # combinator at top level
+    assert variant_plan(FLAT_SCHEMA) is not None
+    assert variant_plan(NESTED_SCHEMA) is None     # array property
+    assert variant_plan({"allOf": []}) is None     # combinator at top
 
 
 def test_fast_path_is_pure_jvm(spark):
@@ -63,29 +63,20 @@ def test_fast_and_document_paths_agree(spark):
     assert any(v for v in fast.values())
 
 
-def test_absent_type_routes_to_document_path():
-    """Without an explicit type=object the NULL-struct encoding can't
-    distinguish 'malformed' from 'valid non-object' — must fall back."""
-    from json_schema_spark.validator.hybrid import is_fast_path
-
-    no_type = {k: v for k, v in FLAT_SCHEMA.items() if k != "type"}
-    assert not is_fast_path(no_type)
-
-
 def test_fast_path_malformed_and_nonobject_agree_with_document_path(spark):
-    """from_json -> NULL struct inputs: unparseable text, scalars,
-    arrays, JSON null. All must fail under type=object, exactly like the
-    document path (ADVICE r1, high)."""
-    from json_schema_spark.validator.hybrid import (is_fast_path,
-                                                    validate_json_auto)
+    """Unparseable text, scalars, arrays, JSON null: all must fail
+    under type=object, exactly like the document path (ADVICE r1,
+    high)."""
+    from json_schema_spark.validator.hybrid import (validate_json_auto,
+                                                    variant_plan)
     from json_schema_spark.validator.json_column import (
         validate_json_column)
 
-    # no required fields: every constraint is null-tolerant, so before
-    # the _parsed guard these all validated as true on the fast path
+    # no required fields: every constraint is null-tolerant, so only
+    # the root parse/object check can fail these
     schema = {"type": "object",
               "properties": {"text": {"type": "string", "minLength": 5}}}
-    assert is_fast_path(schema)
+    assert variant_plan(schema) is not None
     rows = [(1, "not json"), (2, "[1,2,3]"), (3, "42"), (4, "null"),
             (5, '"str"'), (6, "{}"), (7, '{"text": "hello world"}'),
             (8, '{"other": 1}')]
@@ -100,17 +91,17 @@ def test_fast_path_malformed_and_nonobject_agree_with_document_path(spark):
 
 
 def test_fast_path_numeric_type_fidelity(spark):
-    """Integer fields parse as double + floor-check: JSON 1.0 counts as
+    """Integer type checks floor-compare the number: JSON 1.0 counts as
     integer (reference numeric unification), 1.5 and "abc" fail — same
     verdicts as the document path."""
-    from json_schema_spark.validator.hybrid import (is_fast_path,
-                                                    validate_json_auto)
+    from json_schema_spark.validator.hybrid import (validate_json_auto,
+                                                    variant_plan)
     from json_schema_spark.validator.json_column import (
         validate_json_column)
 
     schema = {"type": "object",
               "properties": {"n": {"type": "integer", "minimum": 10}}}
-    assert is_fast_path(schema)
+    assert variant_plan(schema) is not None
     rows = [(1, '{"n": 250}'), (2, '{"n": 250.0}'), (3, '{"n": 1.5}'),
             (4, '{"n": "abc"}'), (5, '{"n": 5}'), (6, '{}'),
             (7, '{"n": true}')]
@@ -175,7 +166,7 @@ def test_variant_path_exact_document_parity(spark):
 
 def test_variant_path_null_vs_absent_required(spark):
     """PHP property_exists semantics: required passes on explicit null
-    (the struct path's documented caveat — closed by the variant path)."""
+    and fails on an absent key."""
     from json_schema_spark.validator.hybrid import validate_json_auto
 
     schema = {"type": "object", "required": ["a"]}
@@ -189,7 +180,7 @@ def test_variant_path_null_vs_absent_required(spark):
 
 def test_variant_path_string_number_fidelity(spark):
     """'123' (JSON string) is not an integer; 123 is not a string —
-    the struct path's Jackson-coercion hole, closed."""
+    no coercion between JSON types."""
     from json_schema_spark.validator.hybrid import validate_json_auto
 
     schema = {"type": "object", "properties": {"a": {"type": "string"}}}
@@ -304,15 +295,13 @@ def test_boolean_exclusive_routes_to_document_path(spark):
     import pytest
 
     from json_schema_spark.errors import SchemaError
-    from json_schema_spark.validator.hybrid import (columnar_plan,
-                                                    validate_json_auto,
+    from json_schema_spark.validator.hybrid import (validate_json_auto,
                                                     variant_plan)
 
     schema = {"type": "object",
               "properties": {"a": {"minimum": 5,
                                    "exclusiveMinimum": True}}}
     assert variant_plan(schema) is None
-    assert columnar_plan(schema) is None
     df = spark.createDataFrame([(1, '{"a": 6}')], "id long, json string")
     with pytest.raises(SchemaError):
         validate_json_auto(df, schema, "json", id_col="id").collect()
@@ -323,11 +312,9 @@ def test_boolean_exclusive_routes_to_document_path(spark):
 
 
 def test_variant_path_additional_properties_false(spark):
-    """additionalProperties: false is enforced via json_object_keys —
-    the struct path (which cannot see undeclared keys) must refuse such
-    schemas instead of silently ignoring the keyword."""
-    from json_schema_spark.validator.hybrid import (columnar_plan,
-                                                    validate_json_auto,
+    """additionalProperties: false is enforced via json_object_keys,
+    with the document path's verdicts."""
+    from json_schema_spark.validator.hybrid import (validate_json_auto,
                                                     variant_plan)
     from json_schema_spark.validator.json_column import (
         validate_json_column)
@@ -336,7 +323,6 @@ def test_variant_path_additional_properties_false(spark):
               "properties": {"a": {"type": "integer"}},
               "additionalProperties": False}
     assert variant_plan(schema) is not None
-    assert columnar_plan(schema) is None
     docs = [(1, '{"a": 1}'), (2, '{"a": 1, "b": 2}'), (3, "{}"),
             (4, '{"b": 2}'), (5, "[1]"), (6, "bad")]
     df = spark.createDataFrame(docs, "id long, json string")
@@ -359,7 +345,7 @@ def test_variant_path_additional_properties_false(spark):
 
 def test_auto_routing_randomized_parity(spark):
     """Fuzz validate_json_auto itself: whatever path a schema routes to
-    (variant / struct / document), verdicts must equal the document
+    (variant / document), verdicts must equal the document
     path — including additionalProperties and composite enum members
     that force fallbacks."""
     import json
@@ -419,7 +405,7 @@ def test_auto_routing_randomized_parity(spark):
 
 def test_unsafe_property_names_route_to_document_path(spark):
     """Names with '.', '[', '*', quotes, or spaces cannot be literally
-    interpolated into variant_get / get_json_object JSON paths ('$.a.b'
+    interpolated into variant_get JSON paths ('$.a.b'
     navigates into NESTING) — such schemas must fall back to the
     document path, whose dict lookups are exact for any name.
 
@@ -427,13 +413,12 @@ def test_unsafe_property_names_route_to_document_path(spark):
     invalid and {"a": {"b": "x"}} judged valid by the old variant path.
     """
     from json_schema_spark.validator.hybrid import (
-        columnar_plan, validate_json_auto, variant_plan)
+        validate_json_auto, variant_plan)
 
     schema = {"type": "object",
               "properties": {"a.b": {"type": "string"}},
               "required": ["a.b"]}
     assert variant_plan(schema) is None
-    assert columnar_plan(schema) is None
 
     df = spark.createDataFrame(
         [(1, '{"a.b": "x"}'),        # flat key literally named "a.b": VALID
@@ -448,7 +433,6 @@ def test_unsafe_property_names_route_to_document_path(spark):
     for bad in ("a[0]", "a*", "a`b", 'a"b', "", "a b"):
         s = {"type": "object", "properties": {bad: {"type": "string"}}}
         assert variant_plan(s) is None, bad
-        assert columnar_plan(s) is None, bad
 
     # plain names (incl. dash/underscore) still take the fast path
     ok = {"type": "object",

@@ -330,57 +330,6 @@ def test_keyless_asof_join_parallel_carry(spark):
     assert "windowspecdefinition(_bkt" in plan
 
 
-def test_streaming_novel_filter_cross_batch(spark, tmp_path):
-    """Cross-batch incremental dedup: keys seen in batch 0 must not be
-    emitted again by batch 1; genuinely new keys pass. Exercised both
-    by driving the processor directly (the foreachBatch contract) and
-    through a real one-batch streaming query."""
-    from pyspark.sql import functions as F
-
-    from json_schema_spark.ops.streaming import StreamingNovelFilter
-
-    emitted: list[set] = []
-    f = StreamingNovelFilter(
-        key_col="digest",
-        sink=lambda df, bid: emitted.append(
-            {r["digest"] for r in df.collect()}))
-
-    b0 = spark.createDataFrame([(f"k{i}",) for i in range(100)],
-                               "digest string")
-    b1 = spark.createDataFrame(
-        [(f"k{i}",) for i in range(50, 150)], "digest string")
-    f(b0, 0)
-    f(b1, 1)
-    assert emitted[0] == {f"k{i}" for i in range(100)}
-    # batch 1: k50-k99 already seen -> only k100-k149 (minus any bloom
-    # false positives, none expected at 100 keys / 8 Mbit)
-    assert emitted[1] == {f"k{i}" for i in range(100, 150)}
-
-    # integration: a real streaming query drives the same processor
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.txt").write_text("\n".join(f"k{i}" for i in range(120)))
-    stream = (spark.readStream.format("text")
-              .schema("value string")
-              .load(str(src))
-              .select(F.col("value").alias("digest")))
-    f2 = StreamingNovelFilter(key_col="digest")
-    q = (stream.writeStream.foreachBatch(f2)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    assert f2.novel_count == 120
-
-    # re-priming from a prior bloom suppresses the already-seen corpus
-    from json_schema_spark.textops.dedup import build_bloom
-    prior = build_bloom(b0, "digest")
-    f3 = StreamingNovelFilter(key_col="digest", bloom=prior,
-                              sink=lambda df, bid: emitted.append(
-                                  {r["digest"] for r in df.collect()}))
-    f3(b1, 0)
-    assert emitted[-1] == {f"k{i}" for i in range(100, 150)}
-
-
 def test_stream_sessions_finalize_past_watermark(spark, tmp_path):
     """Append-mode session windows emit exactly once, when the
     watermark passes their close: a later flush batch advances the
@@ -428,21 +377,6 @@ def test_stream_sessions_finalize_past_watermark(spark, tmp_path):
     assert all(not s.startswith("2024-01-03") for s, _ in finalized)
 
 
-def test_streaming_novel_filter_rejects_mismatched_bloom():
-    """A priming bloom built at a different n_bits would probe wrong
-    bit positions (or index out of the bitmap) — constructor must
-    refuse it loudly (ADVICE r3)."""
-    import pytest as _pytest
-
-    from json_schema_spark.ops.streaming import StreamingNovelFilter
-
-    with _pytest.raises(ValueError, match="n_bits"):
-        StreamingNovelFilter(n_bits=1 << 23, bloom=bytes((1 << 20) // 8))
-    # matching size is accepted
-    f = StreamingNovelFilter(n_bits=1 << 20, bloom=bytes((1 << 20) // 8))
-    assert f.bits.nbytes == (1 << 20) // 8
-
-
 def test_keyless_asof_null_ts_matches_keyed(spark):
     """ADVICE r3: NULL-ts rows must route to bucket -1 (before every
     real bucket) so the keyless path reproduces the keyed path's
@@ -476,7 +410,7 @@ def test_sharded_novel_filter_batches_and_restart(spark, tmp_path):
     distributed (shard, bloom) parquet table — emits each key at most
     once across batches, and a NEW instance pointed at the same
     state_dir resumes from the newest complete epoch (restart
-    recovery, the property the driver-held bloom cannot give)."""
+    recovery)."""
     from json_schema_spark.ops.streaming import ShardedNovelFilter
 
     emitted: list[set] = []
@@ -522,6 +456,23 @@ def test_sharded_novel_filter_batches_and_restart(spark, tmp_path):
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
     assert f3.novel_count == 200
+
+
+def test_sharded_novel_filter_rejects_changed_geometry(tmp_path):
+    """Reopening a state_dir with a different n_shards, bits_per_shard
+    or n_hashes must refuse: the stored bitmaps were built under the
+    stamped geometry, so another shard count re-emits already-seen
+    keys and another bitmap size probes the wrong bits."""
+    from json_schema_spark.ops.streaming import ShardedNovelFilter
+
+    geometry = {"n_shards": 4, "bits_per_shard": 1 << 20, "n_hashes": 3}
+    state = str(tmp_path / "bloom_state")
+    ShardedNovelFilter(state, **geometry)
+    ShardedNovelFilter(state, **geometry)  # same geometry reopens
+    for name, changed in (("n_shards", 8), ("bits_per_shard", 1 << 21),
+                          ("n_hashes", 4)):
+        with pytest.raises(ValueError, match=name):
+            ShardedNovelFilter(state, **{**geometry, name: changed})
 
 
 def test_streaming_drift_matches_batch_operator(spark, tmp_path):

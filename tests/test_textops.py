@@ -450,19 +450,22 @@ def test_dup_group_example_caps(spark):
 
 
 def test_bloom_seen_filter_no_false_negatives(spark):
-    from json_schema_spark.textops.dedup import novel_documents, seen_filter
+    from json_schema_spark.cache import release_caches
+    from json_schema_spark.textops.dedup import seen_filter_sharded
 
     ref = spark.range(1000).selectExpr("concat('k', id) AS digest")
     # candidates: 500 overlapping + 500 new
     cand = spark.range(500, 1500).selectExpr("concat('k', id) AS digest")
-    tagged = seen_filter(ref, cand, n_bits=1 << 16)
-    seen = {r["digest"] for r in
-            tagged.filter("_maybe_seen").collect()}
+    try:
+        # 4 x 2^14 bits: the same 2^16 total bits for the 1000 keys
+        tagged = seen_filter_sharded(ref, cand, n_shards=4,
+                                     bits_per_shard=1 << 14).collect()
+    finally:
+        release_caches()
+    seen = {r["digest"] for r in tagged if r["_maybe_seen"]}
     overlap = {f"k{i}" for i in range(500, 1000)}
     assert overlap <= seen                      # no false negatives
-    novel = {r["digest"] for r in novel_documents(ref, cand,
-                                                  n_bits=1 << 16)
-             .collect()}
+    novel = {r["digest"] for r in tagged if not r["_maybe_seen"]}
     assert novel.isdisjoint(overlap)            # definite-new is exact
     assert len(novel) > 400                     # low false-positive rate
 
@@ -704,20 +707,23 @@ def test_bloom_positions_python_spark_parity(spark):
 
 
 def test_bloom_merge_many_partitions(spark):
-    """Driver merge is one numpy OR per partition — 64 partitions must
-    merge in well under a second and preserve no-false-negatives."""
+    """Keys spread over 64 input partitions fold into one shard bitmap
+    — quickly, and with no false negatives."""
     import time
 
     from json_schema_spark.textops.dedup import (_bloom_positions,
-                                                 build_bloom)
+                                                 build_bloom_shards)
 
     df = (spark.range(5000).repartition(64)
           .selectExpr("cast(id as string) as digest"))
     t0 = time.perf_counter()
-    bloom = build_bloom(df, "digest", n_bits=1 << 20)
+    rows = build_bloom_shards(df, "digest", n_shards=1,
+                              bits_per_shard=1 << 20).collect()
     elapsed = time.perf_counter() - t0
     assert elapsed < 30  # end-to-end incl. the Spark job
-    for key in ("0", "4999", "123"):
+    assert len(rows) == 1
+    bloom = bytes(rows[0]["bloom"])
+    for key in map(str, range(5000)):
         assert all(bloom[p >> 3] & (1 << (p & 7))
                    for p in _bloom_positions(key, 3, 1 << 20))
 
@@ -1130,22 +1136,25 @@ def test_emb_near_dup_default_engages_auto_sizing(emb, monkeypatch):
 
 
 def test_sharded_bloom_parity_and_no_false_negatives(spark):
-    """n_shards=1 must reproduce the single-bitmap bloom byte-for-byte
-    (same position expressions, same scatter); at n_shards=8 every
+    """n_shards=1 must set exactly the bits the _bloom_positions
+    reference names, byte-for-byte; at n_shards=8 every
     built key must still probe as maybe-seen (no false negatives
     across the shard split), and a disjoint key set must come back
     mostly novel (false positives only)."""
     from json_schema_spark.cache import release_caches
     from json_schema_spark.textops.dedup import (
-        build_bloom, build_bloom_shards, seen_filter_sharded)
+        _bloom_positions, build_bloom_shards, seen_filter_sharded)
 
     ref = spark.createDataFrame([(f"k{i}",) for i in range(500)],
                                 "digest string")
     one = build_bloom_shards(ref, "digest", n_shards=1,
                              bits_per_shard=1 << 20).collect()
     assert len(one) == 1 and one[0]["shard"] == 0
-    assert bytes(one[0]["bloom"]) == build_bloom(ref, "digest",
-                                                 n_bits=1 << 20)
+    want = bytearray((1 << 20) // 8)
+    for i in range(500):
+        for p in _bloom_positions(f"k{i}", 3, 1 << 20):
+            want[p >> 3] |= 1 << (p & 7)
+    assert bytes(one[0]["bloom"]) == bytes(want)
 
     try:
         tagged = seen_filter_sharded(ref, ref, "digest", n_shards=8,
@@ -3368,11 +3377,11 @@ def test_minhash_index_family_guard(docs, spark, tmp_path):
 
 def test_bloom_rejects_non_power_of_two_bits(spark):
     """The KM stride is only full-period on power-of-two bitmaps."""
-    from json_schema_spark.textops.dedup import build_bloom
+    from json_schema_spark.textops.dedup import build_bloom_shards
 
     df = spark.createDataFrame([("k1",)], "digest string")
     with pytest.raises(ValueError, match="power of two"):
-        build_bloom(df, n_bits=3 << 20)
+        build_bloom_shards(df, bits_per_shard=3 << 20)
 
 
 def test_sharded_filter_rejects_stale_scheme(tmp_path):
