@@ -2409,8 +2409,10 @@ def _sql_kw_formats() -> str:
         f"(regexp_matches({{c}}, '{rx(FX.RX_HOSTNAME)}') OR regexp_matches("
         f"regexp_replace({{c}}, '^\\[([^\\]]+)\\]$', '\\1'), "
         f"'{rx(FX.RX_IPV6)}'))")
-    # _uri() replay: scheme, authority/host/path/frag extraction with the
-    # same regexes; regexp_extract returns '' on no-match in both engines
+    # `format: uri` replayed component by component (formats.RX_URI does
+    # it in one match): scheme, authority/host/path/frag extraction with
+    # the component regexes; regexp_extract returns '' on no-match in both
+    # engines
     uri_parts = f"""
   SELECT doc_id, u,
          regexp_matches(u, '{rx(FX.RX_URI_SCHEME)}') AS has_scheme,

@@ -2,21 +2,31 @@
 (/root/reference/src/Validator.php:1383-1410 checks one in-memory array; here
 the "array" is 10^12 urls).
 
+Semantics: the "embedded uniqueness constraint" — a row whose key has a
+NULL column takes no part in uniqueness. Such rows are dropped before the
+aggregate, so no reducer ever receives a hot NULL key.
+
 Skew story (north_rule: "partitioning / shuffle / skew handled explicitly"):
 
 1. The count aggregation uses Spark's partial (map-side) aggregation — each
    task emits at most one (key, partial_count) row per distinct key, so even
    a key owning 10% of the table reaches the reducer as ≤ num_tasks rows,
    not 10^11 rows. This is the two-phase aggregation; HashAggregate does it
-   automatically and `explicit_two_phase` below materializes the same plan
-   with an explicit salt for engines/readers that want it visible.
-2. AQE skew-join splitting is enabled in the session defaults for the join
-   back to violating rows.
+   automatically and `duplicate_keys(..., salt_buckets=n)` materializes the
+   same plan with an explicit salt for engines/readers that want it visible.
+2. When the key contains the id column (the flagship's url key), the
+   violation rows come straight out of the aggregate — `dup_count` copies of
+   (id, constraint_id, key) — so the input is read once and nothing is
+   joined. `validate()` goes further and folds this aggregate into the
+   row-level pass (constraints/evaluator.py).
+3. Only a key without the id joins the duplicated keys back to the rows to
+   recover their ids; that join is the one place AQE skew-join splitting
+   (enabled in the session defaults) still matters.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -46,18 +56,34 @@ def duplicate_keys(df: DataFrame, key_cols: list[str],
     return counts.filter(F.col("dup_count") > 1)
 
 
+def constraint_id(key_cols: list[str]) -> str:
+    return ".".join(key_cols) + ".unique"
+
+
+def observed_value(key_cols: list[str]) -> Column:
+    return F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols])
+
+
+def repeated(col: Column, count_col: str) -> Column:
+    """Generator for select(): ``count_col`` copies of ``col``, one per
+    output row."""
+    return F.explode(F.array_repeat(col, F.col(count_col).cast("int")))
+
+
 def uniqueness_violations(df: DataFrame, key_cols: list[str],
                           id_col: str = "url") -> DataFrame:
     """Violation rows (id, constraint_id, observed_value) for duplicated
     keys, matching the engine's violations schema."""
-    constraint_id = ".".join(key_cols) + ".unique"
-    dups = duplicate_keys(df, key_cols)
-    # join back so every duplicated row is reported (semi-join keeps the
-    # plan a shuffle join that AQE can split on skew)
-    joined = df.select(id_col, *[c for c in key_cols if c != id_col]).join(
-        dups, on=key_cols, how="inner")
-    return joined.select(
-        F.col(id_col).cast("string").alias(id_col),
-        F.lit(constraint_id).alias("constraint_id"),
-        F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols])
-         .alias("observed_value"))
+    keyed = df.dropna(subset=key_cols)
+    dups = duplicate_keys(keyed, key_cols)
+    row_id = F.col(id_col).cast("string").alias(id_col)
+    cid = F.lit(constraint_id(key_cols))
+    observed = observed_value(key_cols).alias("observed_value")
+    if id_col in key_cols:
+        # all rows of a key share its id: emit them from the aggregate
+        return dups.select(
+            row_id, repeated(cid, "dup_count").alias("constraint_id"),
+            observed)
+    joined = keyed.select(id_col, *key_cols).join(
+        dups.drop("dup_count"), on=key_cols, how="inner")
+    return joined.select(row_id, cid.alias("constraint_id"), observed)

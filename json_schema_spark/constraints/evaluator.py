@@ -7,9 +7,13 @@ are collected per row into an array of (constraint_id, observed_value)
 structs, and the violations / verdict outputs are derived views of that
 annotated DataFrame. Catalyst CSE + whole-stage codegen fuse all predicates
 into a single generated function per partition — this is the property that
-makes the design hold at 10^12 rows: cost is one scan, no shuffle for the
-row-level checks, shuffles only for the dataset-level checks (uniqueness,
-referential) which are explicitly skew-managed.
+makes the design hold at 10^12 rows: cost is one scan. Without a
+uniqueness key the row-level checks need no shuffle at all. A uniqueness
+key that contains the id column (the flagship's url) is folded into the
+same scan: the violation rows and one presence marker per row go through a
+single map-side-combined count aggregate, so they ride the uniqueness
+shuffle instead of being joined back to it. Other keys and DataFrame
+referentials stay separate, explicitly skew-managed shuffles.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from json_schema_spark.constraints.spec import ConstraintSet
 
 VIOLATIONS_COL = "_violations"
 OK_COL = "_ok"
+VIOLATION_TYPE = "struct<constraint_id:string,observed_value:string>"
 
 
 def apply_defaults(df: DataFrame, cset: ConstraintSet) -> DataFrame:
@@ -59,27 +64,32 @@ class ValidationResult:
     id_col: str
     observation: Observation | None
     _dataset_violations: DataFrame | None  # unique/referential (shuffled path)
+    _fused_key: list[str] | None = None  # unique key counted with the rows
 
     # -- outputs --------------------------------------------------------
     def violations(self) -> DataFrame:
         """(id, constraint_id, observed_value) — row-level violations plus
         dataset-level (uniqueness / referential) ones."""
-        # no size()>0 pre-filter: explode of an empty array already emits
-        # nothing, and a Filter node would force the (large) violation
-        # array expression to be evaluated twice per row
-        row_level = (
-            self.annotated
-            .select(
-                F.col(self.id_col).cast("string").alias(self.id_col),
-                F.explode(F.col(VIOLATIONS_COL)).alias("v"))
-            .select(
-                self.id_col,
-                F.col("v.constraint_id").alias("constraint_id"),
-                F.col("v.observed_value").alias("observed_value"))
-        )
+        if self._fused_key is not None:
+            out = _violations_with_uniqueness(
+                self.annotated, self._fused_key, self.id_col)
+        else:
+            # no size()>0 pre-filter: explode of an empty array already
+            # emits nothing, and a Filter node would force the (large)
+            # violation array expression to be evaluated twice per row
+            out = (
+                self.annotated
+                .select(
+                    F.col(self.id_col).cast("string").alias(self.id_col),
+                    F.explode(F.col(VIOLATIONS_COL)).alias("v"))
+                .select(
+                    self.id_col,
+                    F.col("v.constraint_id").alias("constraint_id"),
+                    F.col("v.observed_value").alias("observed_value"))
+            )
         if self._dataset_violations is not None:
-            row_level = row_level.unionByName(self._dataset_violations)
-        return row_level
+            out = out.unionByName(self._dataset_violations)
+        return out
 
     def valid_rows(self) -> DataFrame:
         base = [c for c in self.annotated.columns
@@ -121,22 +131,59 @@ class ValidationResult:
         return dict(self.observation.get)
 
 
-def _dataset_checks(df: DataFrame, cset: ConstraintSet,
+def _violations_with_uniqueness(annotated: DataFrame, key_cols: list[str],
+                                id_col: str) -> DataFrame:
+    """Row-level and ``<key>.unique`` violations from ONE count aggregate
+    over the annotated scan; ``key_cols`` contains ``id_col``.
+
+    Each row contributes its violation structs plus one NULL presence
+    marker, grouped by (key, violation struct) and counted — map-side
+    combined, so a url crawled 10^6 times reaches the reducer as one
+    counter per task, never as a 10^6-element buffer. A marker group
+    whose key has no NULL column and a count above 1 becomes ``count``
+    uniqueness rows; every violation group becomes ``count`` copies of its
+    row. Same rows as the row-level explode ∪ uniqueness_violations.
+    """
+    from json_schema_spark.checks.uniqueness import (
+        constraint_id,
+        observed_value,
+        repeated,
+    )
+
+    marker = F.array(F.lit(None).cast(VIOLATION_TYPE))
+    counts = (
+        annotated
+        .select(*key_cols,
+                F.explode(F.concat(F.col(VIOLATIONS_COL), marker)).alias("v"))
+        .groupBy(*key_cols, "v")
+        .count())
+    presence = F.col("v").isNull()
+    duplicated = F.col("count") > 1
+    for c in key_cols:
+        duplicated = duplicated & F.col(c).isNotNull()
+    return counts.filter(~presence | duplicated).select(
+        F.col(id_col).cast("string").alias(id_col),
+        repeated(F.when(presence, F.lit(constraint_id(key_cols)))
+                 .otherwise(F.col("v.constraint_id")), "count")
+        .alias("constraint_id"),
+        F.when(presence, observed_value(key_cols))
+         .otherwise(F.col("v.observed_value")).alias("observed_value"))
+
+
+def _dataset_checks(df: DataFrame, keys: list[list[str]], cset: ConstraintSet,
                     id_col: str) -> DataFrame | None:
     """Dataset-level checks that genuinely need data movement → violation
-    rows. Uniqueness always shuffles (see checks/uniqueness.py for the skew
-    story); referential checks against a *DataFrame* dimension broadcast-join.
-    Literal allow-list referentials are pure predicates and are fused into
-    the single-pass row-level projection instead (see validate()) — zero
-    extra scans for them.
+    rows, for the uniqueness ``keys`` not folded into the row-level pass.
+    Uniqueness always shuffles (see checks/uniqueness.py for the skew
+    story); referential checks against a *DataFrame* dimension
+    broadcast-join. Literal allow-list referentials are pure predicates and
+    are fused into the single-pass row-level projection instead (see
+    validate()) — zero extra scans for them.
     """
     from json_schema_spark.checks.referential import referential_violations
     from json_schema_spark.checks.uniqueness import uniqueness_violations
 
-    parts: list[DataFrame] = []
-    for key in cset.unique:
-        cols = list(key) if isinstance(key, (list, tuple)) else [key]
-        parts.append(uniqueness_violations(df, cols, id_col=id_col))
+    parts = [uniqueness_violations(df, cols, id_col=id_col) for cols in keys]
     for col, allowed in cset.referential.items():
         if isinstance(allowed, DataFrame):
             parts.append(referential_violations(df, col, allowed,
@@ -147,6 +194,25 @@ def _dataset_checks(df: DataFrame, cset: ConstraintSet,
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def violation_array(compiled: list[CompiledConstraint]) -> Column:
+    """The ``_violations`` column: one (constraint_id, observed_value)
+    struct per failed constraint. Built as a ``concat`` of one-element or
+    empty arrays rather than a lambda ``filter`` over nullable structs,
+    because ``filter`` is interpreted (CodegenFallback) and would take the
+    whole predicate tree out of whole-stage codegen. The structs are left
+    unnamed (Spark names their fields col1, col2) and named by one cast of
+    the whole array, which keeps two alias calls per constraint out of
+    plan construction."""
+    if not compiled:
+        return F.array().cast(f"array<{VIOLATION_TYPE}>")
+    empty = F.array().cast("array<struct<col1:string,col2:string>>")
+    return F.concat(*[
+        F.when(~c.predicate, F.array(F.struct(
+            F.lit(c.constraint_id), c.observed.cast("string"))))
+        .otherwise(empty)
+        for c in compiled]).cast(f"array<{VIOLATION_TYPE}>")
 
 
 def _referential_constraints(df: DataFrame,
@@ -190,23 +256,8 @@ def validate(
     if dataset_checks:
         compiled = compiled + _referential_constraints(df, cset)
 
-    # one struct per constraint, null when it passes; filter drops the nulls
-    tagged = [
-        F.when(
-            ~c.predicate,
-            F.struct(
-                F.lit(c.constraint_id).alias("constraint_id"),
-                c.observed.cast("string").alias("observed_value")))
-        for c in compiled
-    ]
-    if tagged:
-        varr = F.filter(F.array(*tagged), lambda x: x.isNotNull())
-    else:
-        varr = F.array().cast(
-            "array<struct<constraint_id:string,observed_value:string>>")
-
     annotated = (df
-                 .withColumn(VIOLATIONS_COL, varr)
+                 .withColumn(VIOLATIONS_COL, violation_array(compiled))
                  .withColumn(OK_COL, F.size(F.col(VIOLATIONS_COL)) == 0))
 
     obs = None
@@ -219,7 +270,12 @@ def validate(
             F.sum(F.size(F.col(VIOLATIONS_COL)).cast("long"))
              .alias("violations_total"))
 
-    ds_viol = _dataset_checks(df, cset, id_col) if dataset_checks else None
+    keys = [list(k) if isinstance(k, (list, tuple)) else [k]
+            for k in cset.unique] if dataset_checks else []
+    fused = next((k for k in keys if id_col in k), None)
+    ds_viol = (_dataset_checks(df, [k for k in keys if k is not fused],
+                               cset, id_col)
+               if dataset_checks else None)
 
     return ValidationResult(
         annotated=annotated,
@@ -228,4 +284,5 @@ def validate(
         id_col=id_col,
         observation=obs,
         _dataset_violations=ds_viol,
+        _fused_key=fused,
     )

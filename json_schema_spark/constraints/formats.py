@@ -46,17 +46,18 @@ RX_DATE = r"^([0-9]+)-(0[1-9]|1[012])-(0[1-9]|[12][0-9]|3[01])$"
 # hostname labels (1-63 chars, alnum edges), case-insensitive
 # (Check.php:175) — linear form, no nested quantifier ambiguity, so the
 # JVM regex engine can't blow up on adversarial hyphenated input
-RX_HOSTNAME = (
-    r"^(?i)(?:[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?\.)*"
-    r"[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?$"
+_HOSTNAME = (
+    r"(?:[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?\.)*"
+    r"[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?"
 )
+RX_HOSTNAME = r"^(?i)" + _HOSTNAME + "$"
 
 # Dotted-quad IPv4 (PHP FILTER_VALIDATE_IP accepts only dotted-quad)
 RX_IPV4 = r"^((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])$"
 
 # RFC 4291 IPv6 (full + compressed + v4-mapped)
-RX_IPV6 = (
-    r"^(?:(?:[0-9A-Fa-f]{1,4}:){7}[0-9A-Fa-f]{1,4}"
+_IPV6 = (
+    r"(?:(?:[0-9A-Fa-f]{1,4}:){7}[0-9A-Fa-f]{1,4}"
     r"|(?:[0-9A-Fa-f]{1,4}:){1,7}:"
     r"|(?:[0-9A-Fa-f]{1,4}:){1,6}:[0-9A-Fa-f]{1,4}"
     r"|(?:[0-9A-Fa-f]{1,4}:){1,5}(?::[0-9A-Fa-f]{1,4}){1,2}"
@@ -68,8 +69,9 @@ RX_IPV6 = (
     r"|(?:[0-9A-Fa-f]{1,4}:){1,4}:(?:(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}"
     r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])"
     r"|::(?:[Ff]{4}(?::0{1,4})?:)?(?:(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}"
-    r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9]))$"
+    r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9]))"
 )
+RX_IPV6 = "^" + _IPV6 + "$"
 
 # Pragmatic email (close to PHP FILTER_VALIDATE_EMAIL for common cases;
 # exact-parity path is the pandas fallback)
@@ -80,7 +82,8 @@ RX_EMAIL = (
 )
 
 # uri path / fragment char classes (Check.php:468,482)
-RX_PATH_CHARS = r"^(?i)(?:(%[0-9a-f]{2})|[a-z0-9/:@\-._~!$&'()*+,;=])*$"
+_PATH_CHAR = r"[a-z0-9/:@\-._~!$&'()*+,;=]"
+RX_PATH_CHARS = r"^(?i)(?:(%[0-9a-f]{2})|" + _PATH_CHAR + r")*$"
 
 # json-pointer: '' or sequence of /segments with ~0 ~1 escapes only
 # (Check.php:406-414)
@@ -88,9 +91,48 @@ RX_JSON_POINTER = r"^(?:/[^/#]*)*$"
 RX_TILDE_BAD = r"~([^01]|$)"  # a '~' not followed by 0/1
 RX_REL_JSON_POINTER = r"^(0|[1-9][0-9]*)((?:/[^/#]+)*)(#?)$"
 
-# Simple absolute-URI shape: scheme ':' + allowed chars; host/path validity
-# refined below in _uri()
 RX_URI_SCHEME = r"^[A-Za-z][A-Za-z0-9+.\-]*:"
+
+# Absolute URI (Check.php:243-272) as one anchored match:
+#   scheme ':' ( '//' [userinfo '@'] host [':' port] path ['?' query]
+#                ['#' fragment]  |  opaque )
+# host is empty, a hostname, or a bare or bracketed IPv6; path, fragment
+# and the opaque part are RX_PATH_CHARS runs; the query is not checked.
+# The verdicts are those of checking each component with the anchored
+# regexes above, which is where the line-terminator rules come from: a
+# component's `$` also matches before one final line terminator (_LT),
+# and the `:[0-9]*$` port strip can leave such a terminator on the host.
+# The fragment is everything after the first '#'.
+_LT = r"(?:\r\n|[\n\r\u0085\u2028\u2029])"
+_PCHARS = r"(?:" + _PATH_CHAR + r"++|%[0-9a-f]{2})*+" + _LT + "?"
+_AUTH_END = r"(?=[/?#]|\z)"
+_PORT = r":[0-9]*+"
+_HOST_CORE = r"(?:(?>" + _HOSTNAME + r")|" + _IPV6 + r"|\[" + _IPV6 + r"\])"
+# no trailing ':' + digits: a bare IPv6 ending in one is cut by the port
+# strip, so it is checked in its cut form below
+_HOST_PLAIN = (
+    "(?:(?>" + _HOSTNAME + ")" + _LT + "?"
+    + r"|\[" + _IPV6 + "(?:" + _LT + r"?\]|\]" + _LT + r"|\r\]\n)"
+    + r"|(?![^/?#]*" + _PORT + _LT + "?" + _AUTH_END + ")"
+    + _IPV6 + _LT + "?"
+    + ")?" + _AUTH_END)
+# a trailing ':' + digits (the port) is stripped before the host check
+_HOST_PORTED = (
+    r"(?=[^/?#]*" + _PORT + _LT + "?" + _AUTH_END + ")(?:"
+    + _PORT
+    + "|" + _HOST_CORE + "(?:" + _LT + "?" + _PORT + "|" + _PORT + _LT
+    + r"|\r" + _PORT + r"\n)"
+    + r"|\[" + _IPV6 + "(?:" + _LT + r"\]" + _PORT
+    + r"|\r\](?:\n" + _PORT + "|" + _PORT + r"\n))"
+    + ")" + _AUTH_END)
+# _HOST_PLAIN goes first only for speed: a plain hostname needs no lookahead
+RX_URI = (
+    RX_URI_SCHEME + r"(?i)(?:"
+    + r"//(?:[^@\[\]/?#]*+@)?+(?:" + _HOST_PLAIN + "|" + _HOST_PORTED + ")"
+    + _PCHARS + r"(?:\?[^#]*+)?(?:#" + _PCHARS + ")?"
+    + "|(?!//)" + _PCHARS
+    + r")\z"
+)
 
 
 def _not_tilde_broken(col: Column) -> Column:
@@ -110,36 +152,10 @@ def _hostname(col: Column) -> Column:
     return col.rlike(RX_HOSTNAME) | stripped.rlike(RX_IPV6)
 
 
-def _uri(col: Column) -> Column:
-    """Absolute URI: scheme required; host (if present) must be a hostname;
-    path/fragment restricted to URI char classes — Check.php:243-272.
-
-    Component extraction stays JVM-side: the authority is pulled with
-    regexp_extract (parse_url silently drops malformed authorities, which
-    would let bad-hostname URLs pass), path/fragment with parse_url.
-    """
-    has_scheme = col.rlike(RX_URI_SCHEME)
-    is_hier = col.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://")  # scheme://...
-    # authority = between '//' and the next / ? #, minus userinfo@ and :port
-    authority = F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
-    host = F.regexp_replace(  # strip userinfo@ then :port
-        F.regexp_replace(authority, r"^[^@\[\]]*@", ""), r":[0-9]*$", "")
-    path = F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
-    frag = F.regexp_extract(col, r"#(.*)$", 1)
-    host_ok = (host == "") | _hostname(host)
-    path_ok = (path == "") | path.rlike(RX_PATH_CHARS)
-    frag_ok = (frag == "") | frag.rlike(RX_PATH_CHARS)
-    hier_ok = is_hier & F.coalesce(host_ok & path_ok & frag_ok, F.lit(False))
-    # opaque form (mailto:, urn:): restrict to URI char classes
-    opaque = F.regexp_replace(col, RX_URI_SCHEME, "")
-    opaque_ok = (~is_hier) & F.coalesce(opaque.rlike(RX_PATH_CHARS), F.lit(False))
-    return has_scheme & (hier_ok | opaque_ok)
-
-
 def _uri_reference(col: Column) -> Column:
     # like uri but scheme optional — Check.php:279-304
     rel_ok = col.rlike(RX_PATH_CHARS) | col.rlike(r"^(?i)[a-z0-9/:@\-._~!$&'()*+,;=%?#]*$")
-    return _uri(col) | (~col.rlike(RX_URI_SCHEME) & rel_ok)
+    return col.rlike(RX_URI) | (~col.rlike(RX_URI_SCHEME) & rel_ok)
 
 
 def _uri_template(col: Column) -> Column:
@@ -149,7 +165,7 @@ def _uri_template(col: Column) -> Column:
         F.length(col) - F.length(F.regexp_replace(col, r"\{", ""))
     ) == (F.length(col) - F.length(F.regexp_replace(col, r"\}", "")))
     stripped = F.regexp_replace(col, r"[{}]", "")
-    return balanced & (_uri(stripped) | stripped.rlike(RX_PATH_CHARS))
+    return balanced & (stripped.rlike(RX_URI) | stripped.rlike(RX_PATH_CHARS))
 
 
 def _json_pointer(col: Column) -> Column:
@@ -188,7 +204,7 @@ _REGISTRY: dict[str, Callable[[Column], Column]] = {
     "idn-hostname": _pandas_format("idn-hostname"),
     "ipv4": _rx(RX_IPV4),
     "ipv6": _rx(RX_IPV6),
-    "uri": _uri,
+    "uri": _rx(RX_URI),
     "uri-reference": _uri_reference,
     "iri": _pandas_format("iri"),
     "iri-reference": _pandas_format("iri-reference"),

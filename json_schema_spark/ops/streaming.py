@@ -23,25 +23,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from json_schema_spark.constraints.compiler import compile_constraints
+from json_schema_spark.constraints.evaluator import violation_array
 from json_schema_spark.constraints.spec import ConstraintSet
 
 
 def annotate_stream(stream_df: DataFrame, cset: ConstraintSet) -> DataFrame:
     """Add `_violations` (array of (constraint_id, observed_value)) to a
-    streaming DataFrame — identical expression set as the batch path
-    (evaluator.validate), re-derived here because streams cannot observe()
-    or run dataset-level joins."""
+    streaming DataFrame — the batch path's builder (evaluator.validate)
+    without its observe() and dataset-level checks, which streams cannot
+    run."""
     compiled = compile_constraints(cset, stream_df.schema)
-    tagged = [
-        F.when(~c.predicate,
-               F.struct(F.lit(c.constraint_id).alias("constraint_id"),
-                        c.observed.cast("string").alias("observed_value")))
-        for c in compiled]
-    varr = (F.filter(F.array(*tagged), lambda x: x.isNotNull()) if tagged
-            else F.array().cast(
-                "array<struct<constraint_id:string,observed_value:string>>"))
     return (stream_df
-            .withColumn("_violations", varr)
+            .withColumn("_violations", violation_array(compiled))
             .withColumn("_ok", F.size("_violations") == 0))
 
 

@@ -207,6 +207,92 @@ def test_formats_basic(spark):
     assert got == {("b", "s.format")}
 
 
+def _uri_by_components(col, frag_rx=r"(?s)#(.*)$"):
+    """The component-wise `format: uri` check RX_URI replaced: scheme,
+    authority, host, path, fragment and the opaque form pulled out and
+    checked one regex at a time. ``frag_rx=r"#(.*)$"`` is its original
+    fragment extraction, which cannot cross a line terminator."""
+    from json_schema_spark.constraints import formats as FX
+
+    scheme = r"^[A-Za-z][A-Za-z0-9+.\-]*"
+    is_hier = col.rlike(scheme + "://")
+    authority = F.regexp_extract(col, scheme + r"://([^/?#]*)", 1)
+    host = F.regexp_replace(F.regexp_replace(
+        authority, r"^[^@\[\]]*@", ""), r":[0-9]*$", "")
+    path = F.regexp_extract(col, scheme + r"://[^/?#]*([^?#]*)", 1)
+    frag = F.regexp_extract(col, frag_rx, 1)
+    unbracketed = F.regexp_replace(host, r"^\[([^\]]+)\]$", "$1")
+    host_ok = ((host == "") | host.rlike(FX.RX_HOSTNAME)
+               | unbracketed.rlike(FX.RX_IPV6))
+    path_ok = (path == "") | path.rlike(FX.RX_PATH_CHARS)
+    frag_ok = (frag == "") | frag.rlike(FX.RX_PATH_CHARS)
+    opaque = F.regexp_replace(col, FX.RX_URI_SCHEME, "")
+    return col.rlike(FX.RX_URI_SCHEME) & (
+        (is_hier & F.coalesce(host_ok & path_ok & frag_ok, F.lit(False)))
+        | (~is_hier & F.coalesce(opaque.rlike(FX.RX_PATH_CHARS),
+                                 F.lit(False))))
+
+
+_LINE_TERMINATORS = ["\n", "\r", "\r\n", "\u0085", "\u2028", "\u2029"]
+
+
+def _adversarial_url(rng):
+    if rng.random() < 0.2:
+        u = rng.choice(["mailto", "urn", "a+b.c-d", "1x", ""]) + ":" + \
+            rng.choice(["", "x", "a@b", "/x", "%2", "%2f", "a b", "//"])
+    else:
+        u = (rng.choice(["http", "HTTPS", "a+b.c-d", "h_t", ""]) + "://"
+             + rng.choice(["", "", "user@", "u:p@", "a@b@", "[x@"])
+             + rng.choice(["example.com", "EX.org", "-bad.com", "a_b.com",
+                           "x" * 64 + ".com", "1.2.3.4", "", "[", "[]",
+                           "[::1]", "::1", "1::", "::", "2001:db8::a",
+                           "[::ffff:1.2.3.4]", "::ffff:1.2.3.4",
+                           "[fe80::1%eth0]", "1:2:3:4:5:6:7:8", "a.b."])
+             + rng.choice(["", "", ":", ":80", ":8a", "::80"])
+             + rng.choice(["", "/", "/a/b", "/%41%4a", "/%4", "/%zz",
+                           "/a b", "/\u00e9", "/a:b@c", "//x"])
+             + rng.choice(["", "", "?", "?q=1", "?a b"])
+             + rng.choice(["", "", "#", "#f", "#a#b", "#%20", "#\u00e9"]))
+    for _ in range(rng.choice([0, 0, 1, 1, 2, 3])):
+        i = rng.randrange(len(u) + 1)
+        u = u[:i] + rng.choice(_LINE_TERMINATORS) + u[i:]
+    return u
+
+
+def test_uri_regex_matches_component_checks(spark):
+    """RX_URI gives the component-wise check's verdict on seeded
+    adversarial urls: userinfo, ports, bracketed and bare IPv6, opaque
+    forms, % escapes and line terminators anywhere."""
+    import random
+
+    from json_schema_spark.constraints.formats import RX_URI
+
+    rng = random.Random(20261017)
+    urls = sorted({_adversarial_url(rng) for _ in range(6000)})
+    urls += ["http://h\r:80\n", "http://[::1\r]\n:80", "http://[::1\n]",
+             "http://[::1]\r\n:8", "http://[::1\r]:8\n", "http://::1\n",
+             "http://1::\u2028/p", "http://u@h:1\u0085?q#f\r\n"]
+    df = spark.createDataFrame([(u,) for u in urls], "u string")
+    rows = df.select("u", F.col("u").rlike(RX_URI).alias("one"),
+                     _uri_by_components(F.col("u")).alias("parts")).collect()
+    diff = [(r["u"], r["one"]) for r in rows if r["one"] != r["parts"]]
+    assert diff == []
+    assert 0 < sum(r["one"] for r in rows) < len(rows)
+
+
+def test_uri_fragment_checked_across_line_terminators(spark):
+    """The fragment is everything after the first '#': a line terminator
+    inside it no longer hides the characters after it."""
+    urls = ["https://example.com/a#\n\u00e9", "https://example.com/#x\ny z",
+            "https://example.com/#ok\n", "https://example.com/#ok"]
+    got = _violated(spark, [(u, u) for u in urls], "id string, s string",
+                    {"s": {"format": "uri"}})
+    assert got == {(urls[0], "s.format"), (urls[1], "s.format")}
+    old = spark.createDataFrame([(u,) for u in urls], "u string").select(
+        _uri_by_components(F.col("u"), r"#(.*)$")).collect()
+    assert [r[0] for r in old] == [True, True, True, True]
+
+
 def test_unknown_format_is_schema_error(spark):
     df = spark.createDataFrame([("a", "x")], "id string, s string")
     with pytest.raises(SchemaError):

@@ -50,10 +50,11 @@ def test_validation_is_pure_codegen(docs):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF",
                    "MapInPandas"):
         assert marker not in plan, f"Python on the hot path: {marker}"
-    # codegen stages render as '*(n)' in executedPlan().toString()
-    # (the higher-order filter/array projection itself doesn't codegen,
-    # but the scan and output stages must)
+    # codegen stages render as '*(n)' in executedPlan().toString(); the
+    # violation array is a concat of CASE WHENs, so no lambda (an
+    # interpreted CodegenFallback) keeps the predicates out of the stage
     assert "*(1)" in plan
+    assert "lambdafunction" not in plan
 
 
 def test_webtext_validation_pure_codegen(spark):
@@ -62,8 +63,24 @@ def test_webtext_validation_pure_codegen(spark):
 
     res = validate_webtext(generate_webtext(spark, 1000))
     plan = _plan(res.violations())
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
-        assert marker not in plan, f"Python on the hot path: {marker}"
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF",
+                   "lambdafunction"):
+        assert marker not in plan, f"not codegen on the hot path: {marker}"
+
+
+def test_flagship_violations_read_input_once(spark, tmp_path):
+    """url uniqueness is folded into the row-level pass: one parquet
+    scan, one shuffle (the count aggregate), no broadcast, no join."""
+    from json_schema_spark.flagship import validate_webtext
+    from json_schema_spark.sources.webtext import generate_webtext
+
+    path = str(tmp_path / "webtext")
+    generate_webtext(spark, 2000).write.parquet(path)
+    plan = _plan(validate_webtext(spark.read.parquet(path)).violations())
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_referential_dim_join_broadcasts(spark, docs):

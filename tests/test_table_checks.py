@@ -31,6 +31,78 @@ def test_uniqueness_violations_reports_every_dup_row(spark):
     assert all(r["constraint_id"] == "url.unique" for r in rows)
 
 
+def test_uniqueness_null_keys_take_no_part(spark):
+    """Embedded-uniqueness semantics: a key with any NULL column is never
+    a duplicate, on the fused validate() path, the aggregate-only path
+    (id in the key) and the join-back path (id not in the key); each
+    NULL-url row still reports its own row-level violations."""
+    from json_schema_spark import ConstraintSet, validate
+
+    df = spark.createDataFrame(
+        [(None, "en"), (None, "en"), (None, None), ("u1", None),
+         ("u1", None), ("u2", "de"), ("u2", "de"), ("u3", "de")],
+        "url string, lang string")
+    cset = ConstraintSet(columns={"url": {"type": "string",
+                                          "required": True}},
+                         unique=["url", ["url", "lang"]])
+    got = sorted((r["url"] or "", r["constraint_id"])
+                 for r in validate(df, cset, id_col="url",
+                                   observe=False).violations().collect())
+    assert got == (
+        [("", "url.required")] * 3 + [("", "url.type")] * 3
+        + [("u1", "url.unique")] * 2 + [("u2", "url.lang.unique")] * 2
+        + [("u2", "url.unique")] * 2)
+
+    def keys(out):
+        return sorted((r["url"] or "", r["observed_value"])
+                      for r in out.collect())
+
+    assert keys(uniqueness_violations(df, ["url", "lang"])) == \
+        [("u2", "u2|de")] * 2
+    # key without the id: the three NULL langs are no duplicate
+    assert keys(uniqueness_violations(df, ["lang"])) == \
+        [("", "en"), ("", "en"), ("u2", "de"), ("u2", "de"), ("u3", "de")]
+
+
+def test_fused_violations_match_row_level_union_join_back(spark, tmp_path):
+    """validate()'s one-aggregate violations equal, as a multiset, the
+    row-level explode plus a join-back uniqueness check, on webtext with
+    a hot url repeated 500 times with violations and NULL urls."""
+    from collections import Counter
+
+    from json_schema_spark.flagship import validate_webtext
+    from json_schema_spark.sources.webtext import generate_webtext
+
+    base = generate_webtext(spark, 3000)
+    ts = base.first()["warc_ts"]
+    extra = spark.createDataFrame(
+        [("https://bad_host!7.example/hot", ts, None, "", "xx")] * 500
+        + [(None, ts, None, None, "en")] * 5,
+        base.schema)
+    path = str(tmp_path / "webtext")
+    base.unionByName(extra).write.parquet(path)
+    df = spark.read.parquet(path)
+
+    res = validate_webtext(df)
+    got = Counter(tuple(r) for r in res.violations().collect())
+
+    row_level = (res.annotated
+                 .select("url", F.explode("_violations").alias("v"))
+                 .select("url", "v.constraint_id", "v.observed_value"))
+    dups = (df.filter(F.col("url").isNotNull()).groupBy("url").count()
+            .filter(F.col("count") > 1))
+    join_back = df.select("url").join(dups, "url").select(
+        "url", F.lit("url.unique"), F.col("url"))
+    want = Counter(tuple(r)
+                   for r in row_level.unionByName(
+                       join_back.toDF(*row_level.columns)).collect())
+    assert got == want
+    hot = "https://bad_host!7.example/hot"
+    assert got[(hot, "url.unique", hot)] == 500
+    assert got[(hot, "text.minLength", "")] == 500
+    assert got[(None, "url.required", None)] == 5
+
+
 def test_referential_list_and_df(spark):
     df = spark.createDataFrame(
         [("a", "en"), ("b", "xx"), ("c", None)], "url string, lang string")
