@@ -2422,7 +2422,7 @@ def _sql_kw_formats() -> str:
              '^[^@\\[\\]]*@', ''), ':[0-9]*$', '') AS uhost,
          regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)',
                         1) AS upath,
-         regexp_extract(u, '#(.*)$', 1) AS ufrag,
+         regexp_extract(u, '(?s)#(.*)$', 1) AS ufrag,
          regexp_replace(u, '{rx(FX.RX_URI_SCHEME)}', '') AS uopaque
   FROM probes
 """

@@ -71,8 +71,12 @@ class ValidationResult:
         """(id, constraint_id, observed_value) — row-level violations plus
         dataset-level (uniqueness / referential) ones."""
         if self._fused_key is not None:
-            out = _violations_with_uniqueness(
-                self.annotated, self._fused_key, self.id_col)
+            from json_schema_spark.checks.uniqueness import (
+                counted_violations,
+            )
+
+            out = counted_violations(self.annotated, self._fused_key,
+                                     self.id_col, F.col(VIOLATIONS_COL))
         else:
             # no size()>0 pre-filter: explode of an empty array already
             # emits nothing, and a Filter node would force the (large)
@@ -129,45 +133,6 @@ class ValidationResult:
         if self.observation is None:
             return {}
         return dict(self.observation.get)
-
-
-def _violations_with_uniqueness(annotated: DataFrame, key_cols: list[str],
-                                id_col: str) -> DataFrame:
-    """Row-level and ``<key>.unique`` violations from ONE count aggregate
-    over the annotated scan; ``key_cols`` contains ``id_col``.
-
-    Each row contributes its violation structs plus one NULL presence
-    marker, grouped by (key, violation struct) and counted — map-side
-    combined, so a url crawled 10^6 times reaches the reducer as one
-    counter per task, never as a 10^6-element buffer. A marker group
-    whose key has no NULL column and a count above 1 becomes ``count``
-    uniqueness rows; every violation group becomes ``count`` copies of its
-    row. Same rows as the row-level explode ∪ uniqueness_violations.
-    """
-    from json_schema_spark.checks.uniqueness import (
-        constraint_id,
-        observed_value,
-        repeated,
-    )
-
-    marker = F.array(F.lit(None).cast(VIOLATION_TYPE))
-    counts = (
-        annotated
-        .select(*key_cols,
-                F.explode(F.concat(F.col(VIOLATIONS_COL), marker)).alias("v"))
-        .groupBy(*key_cols, "v")
-        .count())
-    presence = F.col("v").isNull()
-    duplicated = F.col("count") > 1
-    for c in key_cols:
-        duplicated = duplicated & F.col(c).isNotNull()
-    return counts.filter(~presence | duplicated).select(
-        F.col(id_col).cast("string").alias(id_col),
-        repeated(F.when(presence, F.lit(constraint_id(key_cols)))
-                 .otherwise(F.col("v.constraint_id")), "count")
-        .alias("constraint_id"),
-        F.when(presence, observed_value(key_cols))
-         .otherwise(F.col("v.observed_value")).alias("observed_value"))
 
 
 def _dataset_checks(df: DataFrame, keys: list[list[str]], cset: ConstraintSet,

@@ -96,42 +96,23 @@ RX_URI_SCHEME = r"^[A-Za-z][A-Za-z0-9+.\-]*:"
 # Absolute URI (Check.php:243-272) as one anchored match:
 #   scheme ':' ( '//' [userinfo '@'] host [':' port] path ['?' query]
 #                ['#' fragment]  |  opaque )
-# host is empty, a hostname, or a bare or bracketed IPv6; path, fragment
-# and the opaque part are RX_PATH_CHARS runs; the query is not checked.
-# The verdicts are those of checking each component with the anchored
-# regexes above, which is where the line-terminator rules come from: a
-# component's `$` also matches before one final line terminator (_LT),
-# and the `:[0-9]*$` port strip can leave such a terminator on the host.
-# The fragment is everything after the first '#'.
-_LT = r"(?:\r\n|[\n\r\u0085\u2028\u2029])"
-_PCHARS = r"(?:" + _PATH_CHAR + r"++|%[0-9a-f]{2})*+" + _LT + "?"
+# host is empty, a hostname, or a bracketed or bare IPv6; path, fragment
+# and the opaque part are runs of path characters and % escapes; userinfo
+# and query are not checked. Every checked component ends at \z, so a line
+# terminator in one is rejected like any other character outside its class
+# (the DuckDB replays of this check anchor the same way: RE2's `$` is `\z`).
+# A trailing ':' + digits of the authority is the port, so a bare IPv6
+# ending in one is checked without it. The fragment is everything after
+# the first '#'.
+_PCHARS = r"(?:" + _PATH_CHAR + r"++|%[0-9a-f]{2})*+"
 _AUTH_END = r"(?=[/?#]|\z)"
-_PORT = r":[0-9]*+"
-_HOST_CORE = r"(?:(?>" + _HOSTNAME + r")|" + _IPV6 + r"|\[" + _IPV6 + r"\])"
-# no trailing ':' + digits: a bare IPv6 ending in one is cut by the port
-# strip, so it is checked in its cut form below
-_HOST_PLAIN = (
-    "(?:(?>" + _HOSTNAME + ")" + _LT + "?"
-    + r"|\[" + _IPV6 + "(?:" + _LT + r"?\]|\]" + _LT + r"|\r\]\n)"
-    + r"|(?![^/?#]*" + _PORT + _LT + "?" + _AUTH_END + ")"
-    + _IPV6 + _LT + "?"
-    + ")?" + _AUTH_END)
-# a trailing ':' + digits (the port) is stripped before the host check
-_HOST_PORTED = (
-    r"(?=[^/?#]*" + _PORT + _LT + "?" + _AUTH_END + ")(?:"
-    + _PORT
-    + "|" + _HOST_CORE + "(?:" + _LT + "?" + _PORT + "|" + _PORT + _LT
-    + r"|\r" + _PORT + r"\n)"
-    + r"|\[" + _IPV6 + "(?:" + _LT + r"\]" + _PORT
-    + r"|\r\](?:\n" + _PORT + "|" + _PORT + r"\n))"
-    + ")" + _AUTH_END)
-# _HOST_PLAIN goes first only for speed: a plain hostname needs no lookahead
+_HOST = (
+    r"(?:(?:(?>" + _HOSTNAME + r")|\[" + _IPV6 + r"\])?(?::[0-9]*+)?"
+    + r"|(?![^/?#]*:[0-9]*+" + _AUTH_END + ")" + _IPV6
+    + "|" + _IPV6 + r":[0-9]*+)" + _AUTH_END)
 RX_URI = (
-    RX_URI_SCHEME + r"(?i)(?:"
-    + r"//(?:[^@\[\]/?#]*+@)?+(?:" + _HOST_PLAIN + "|" + _HOST_PORTED + ")"
-    + _PCHARS + r"(?:\?[^#]*+)?(?:#" + _PCHARS + ")?"
-    + "|(?!//)" + _PCHARS
-    + r")\z"
+    RX_URI_SCHEME + r"(?i)(?://(?:[^@\[\]/?#]*+@)?+" + _HOST + _PCHARS
+    + r"(?:\?[^#]*+)?(?:#" + _PCHARS + r")?|(?!//)" + _PCHARS + r")\z"
 )
 
 

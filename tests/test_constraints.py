@@ -207,29 +207,33 @@ def test_formats_basic(spark):
     assert got == {("b", "s.format")}
 
 
-def _uri_by_components(col, frag_rx=r"(?s)#(.*)$"):
+def _uri_by_components(col):
     """The component-wise `format: uri` check RX_URI replaced: scheme,
     authority, host, path, fragment and the opaque form pulled out and
-    checked one regex at a time. ``frag_rx=r"#(.*)$"`` is its original
-    fragment extraction, which cannot cross a line terminator."""
+    checked one regex at a time. Every component is anchored at \\z, the
+    rule RX_URI follows; the engine's component regexes end in Java's `$`,
+    which also matches before a final line terminator."""
     from json_schema_spark.constraints import formats as FX
+
+    def z(rx):
+        return rx[:-1] + r"\z"
 
     scheme = r"^[A-Za-z][A-Za-z0-9+.\-]*"
     is_hier = col.rlike(scheme + "://")
     authority = F.regexp_extract(col, scheme + r"://([^/?#]*)", 1)
     host = F.regexp_replace(F.regexp_replace(
-        authority, r"^[^@\[\]]*@", ""), r":[0-9]*$", "")
+        authority, r"^[^@\[\]]*@", ""), r":[0-9]*\z", "")
     path = F.regexp_extract(col, scheme + r"://[^/?#]*([^?#]*)", 1)
-    frag = F.regexp_extract(col, frag_rx, 1)
-    unbracketed = F.regexp_replace(host, r"^\[([^\]]+)\]$", "$1")
-    host_ok = ((host == "") | host.rlike(FX.RX_HOSTNAME)
-               | unbracketed.rlike(FX.RX_IPV6))
-    path_ok = (path == "") | path.rlike(FX.RX_PATH_CHARS)
-    frag_ok = (frag == "") | frag.rlike(FX.RX_PATH_CHARS)
+    frag = F.regexp_extract(col, r"(?s)#(.*)\z", 1)
+    unbracketed = F.regexp_replace(host, r"^\[([^\]]+)\]\z", "$1")
+    host_ok = ((host == "") | host.rlike(z(FX.RX_HOSTNAME))
+               | unbracketed.rlike(z(FX.RX_IPV6)))
+    path_ok = (path == "") | path.rlike(z(FX.RX_PATH_CHARS))
+    frag_ok = (frag == "") | frag.rlike(z(FX.RX_PATH_CHARS))
     opaque = F.regexp_replace(col, FX.RX_URI_SCHEME, "")
     return col.rlike(FX.RX_URI_SCHEME) & (
         (is_hier & F.coalesce(host_ok & path_ok & frag_ok, F.lit(False)))
-        | (~is_hier & F.coalesce(opaque.rlike(FX.RX_PATH_CHARS),
+        | (~is_hier & F.coalesce(opaque.rlike(z(FX.RX_PATH_CHARS)),
                                  F.lit(False))))
 
 
@@ -269,9 +273,10 @@ def test_uri_regex_matches_component_checks(spark):
 
     rng = random.Random(20261017)
     urls = sorted({_adversarial_url(rng) for _ in range(6000)})
-    urls += ["http://h\r:80\n", "http://[::1\r]\n:80", "http://[::1\n]",
-             "http://[::1]\r\n:8", "http://[::1\r]:8\n", "http://::1\n",
-             "http://1::\u2028/p", "http://u@h:1\u0085?q#f\r\n"]
+    urls += ["http://h\n/", "http://h\r:80/", "http://h:80\n",
+             "http://[::1\n]", "http://[::1]\n", "http://::1\n",
+             "http://1::\u2028/p", "http://h/p\n", "http://u\n@h/",
+             "http://h/?q\n", "http://h/#f\r\n", "mailto:a\u0085"]
     df = spark.createDataFrame([(u,) for u in urls], "u string")
     rows = df.select("u", F.col("u").rlike(RX_URI).alias("one"),
                      _uri_by_components(F.col("u")).alias("parts")).collect()
@@ -280,17 +285,20 @@ def test_uri_regex_matches_component_checks(spark):
     assert 0 < sum(r["one"] for r in rows) < len(rows)
 
 
-def test_uri_fragment_checked_across_line_terminators(spark):
-    """The fragment is everything after the first '#': a line terminator
-    inside it no longer hides the characters after it."""
-    urls = ["https://example.com/a#\n\u00e9", "https://example.com/#x\ny z",
-            "https://example.com/#ok\n", "https://example.com/#ok"]
-    got = _violated(spark, [(u, u) for u in urls], "id string, s string",
-                    {"s": {"format": "uri"}})
-    assert got == {(urls[0], "s.format"), (urls[1], "s.format")}
-    old = spark.createDataFrame([(u,) for u in urls], "u string").select(
-        _uri_by_components(F.col("u"), r"#(.*)$")).collect()
-    assert [r[0] for r in old] == [True, True, True, True]
+def test_uri_rejects_line_terminators_in_checked_components(spark):
+    """A line terminator in the host, port, path, fragment or opaque part
+    fails `format: uri`, final or not; userinfo and query are not checked.
+    The fragment is everything after the first '#', so a terminator inside
+    it does not hide the characters after it."""
+    bad = ["https://example.com/a#\n\u00e9", "https://example.com/#x\ny z",
+           "https://example.com/#ok\n", "https://example.com/a\n",
+           "https://example.com\r\n", "https://example.com:80\n",
+           "mailto:a\u2028"]
+    good = ["https://example.com/#ok", "https://example.com/?q\n",
+            "https://u\n@example.com/"]
+    got = _violated(spark, [(u, u) for u in bad + good],
+                    "id string, s string", {"s": {"format": "uri"}})
+    assert got == {(u, "s.format") for u in bad}
 
 
 def test_unknown_format_is_schema_error(spark):

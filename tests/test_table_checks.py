@@ -67,20 +67,31 @@ def test_uniqueness_null_keys_take_no_part(spark):
 def test_fused_violations_match_row_level_union_join_back(spark, tmp_path):
     """validate()'s one-aggregate violations equal, as a multiset, the
     row-level explode plus a join-back uniqueness check, on webtext with
-    a hot url repeated 500 times with violations and NULL urls."""
+    a hot url repeated more than REPEAT_CHUNK times with violations and a
+    large group of NULL urls."""
     from collections import Counter
 
+    from json_schema_spark.checks.uniqueness import REPEAT_CHUNK
     from json_schema_spark.flagship import validate_webtext
     from json_schema_spark.sources.webtext import generate_webtext
 
+    hot = "https://bad_host!7.example/hot"
+    n_hot, n_null = REPEAT_CHUNK + 500, 3000
     base = generate_webtext(spark, 3000)
     ts = base.first()["warc_ts"]
-    extra = spark.createDataFrame(
-        [("https://bad_host!7.example/hot", ts, None, "", "xx")] * 500
-        + [(None, ts, None, None, "en")] * 5,
-        base.schema)
+
+    def rows(n, url, text, lang):
+        return spark.range(n).select(
+            F.lit(url).cast("string").alias("url"),
+            F.lit(ts).alias("warc_ts"),
+            F.lit(None).cast("binary").alias("html"),
+            F.lit(text).cast("string").alias("text"),
+            F.lit(lang).alias("lang"))
+
     path = str(tmp_path / "webtext")
-    base.unionByName(extra).write.parquet(path)
+    (base.unionByName(rows(n_hot, hot, "", "xx"))
+     .unionByName(rows(n_null, None, None, "en"))
+     .write.parquet(path))
     df = spark.read.parquet(path)
 
     res = validate_webtext(df)
@@ -97,10 +108,33 @@ def test_fused_violations_match_row_level_union_join_back(spark, tmp_path):
                    for r in row_level.unionByName(
                        join_back.toDF(*row_level.columns)).collect())
     assert got == want
-    hot = "https://bad_host!7.example/hot"
-    assert got[(hot, "url.unique", hot)] == 500
-    assert got[(hot, "text.minLength", "")] == 500
-    assert got[(None, "url.required", None)] == 5
+    assert got[(hot, "url.unique", hot)] == n_hot
+    assert got[(hot, "text.minLength", "")] == n_hot
+    assert got[(None, "url.required", None)] == n_null
+
+
+def test_repeat_rows_chunks_long_counts(spark):
+    """Each row comes out ``count`` times across chunk boundaries, none for
+    a zero or NULL count; a count beyond the int range is neither wrapped nor refused, and its copies
+    stream: the per-chunk Generate runs outside whole-stage codegen, so
+    taking 3 of 2^31 + 1 copies builds one chunk, not all of them."""
+    from json_schema_spark.checks.uniqueness import REPEAT_CHUNK, repeat_rows
+
+    counts = [1, 2, REPEAT_CHUNK, REPEAT_CHUNK + 1, 2 * REPEAT_CHUNK + 5]
+    df = spark.createDataFrame([(str(n), n) for n in counts],
+                               "k string, n long")
+    cols = {"k": F.col("k")}
+    got = {r["k"]: r["count"] for r in repeat_rows(df, cols, F.col("n"))
+           .groupBy("k").count().collect()}
+    assert got == {str(n): n for n in counts}
+    none = spark.createDataFrame([("z", 0), ("z", None)], "k string, n long")
+    assert repeat_rows(none, cols, F.col("n")).count() == 0
+    huge = spark.createDataFrame([("x", 2**31 + 1)], "k string, n long")
+    first = repeat_rows(huge, cols, F.col("n")).limit(3)
+    plan = first._jdf.queryExecution().executedPlan().toString()
+    chunk_gen = [ln for ln in plan.splitlines() if "array_repeat" in ln]
+    assert len(chunk_gen) == 1 and "*(" not in chunk_gen[0], plan
+    assert first.collect() == [("x",)] * 3
 
 
 def test_referential_list_and_df(spark):
